@@ -365,9 +365,9 @@ def spans_df_from_documents(spark: SparkSession, sf_dir: str, mult: int = 1,
 
     # NFKC probe: ~25% of docs get non-NFKC-normal chars prepended
     # (Ⅻ→XII, ﬁ→fi, ①→1 under NFKC) so the oracle gate PINS the unicode
-    # config per engine: the Arrow query (normalize_unicode=True) folds
-    # them in E8 routes, the Catalyst query must NOT — and pdf_block text
-    # is verbatim in both.
+    # config per query: the DEFAULT_CONFIG query (normalize_unicode=True)
+    # folds them in E8 routes, the CATALYST_CONFIG queries must NOT — and
+    # pdf_block text is verbatim in both.
     probe = F.when(F.pmod(h2, 4) == 0, F.lit(NFKC_PROBE)).otherwise(F.lit(""))
     df = df.withColumn("text", F.concat(probe, F.col("text")))
     w = (F.pmod(h, F.lit(360)) + 41).cast("int")      # 41..400 straddles w>100 and w>50

@@ -51,7 +51,9 @@ def frontier_schedule(df: DataFrame, id_col: str = "url_id",
                   F.col(prio_col).cast("long").alias("priority"),
                   F.col(delay_col).cast("long").alias("delay_ms"))
     counts = q.groupBy("host").agg(F.count("*").alias("_n"))
-    guard = counts.select(F.max("_n").alias("_mx")).select(
+    # an empty frontier has no hosts: max() is NULL there, not over cap
+    guard = counts.select(
+        F.coalesce(F.max("_n"), F.lit(0)).alias("_mx")).select(
         F.when(F.col("_mx") <= max_host_queue, F.lit(1))
         .otherwise(F.raise_error(F.lit(
             f"frontier_schedule: a host queue exceeds max_host_queue="

@@ -6,7 +6,7 @@ Pipeline (north rule, SURVEY.md §3.1 "Our Spark lifecycle"):
       → checkpoint anti-join against committed lineage partitions (resume)
       → deterministic salted bucketing on xxhash64(doc_id)  [skew defusal]
       → optional intra-doc chunking for giant span arrays
-      → extraction kernel (Arrow or Catalyst)
+      → Arrow extraction kernel
       → re-assemble chunks, reading-order sort preserved
       → write output partitioned by bucket  +  lineage rows
         (partition_id=bucket, doc_count, checksum=bit_xor(doc_hash) hex,
@@ -38,16 +38,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from rag_document_parser_spark.config import (CATALYST_CONFIG, DEFAULT_CONFIG,
-                                              ExtractConfig)
-from rag_document_parser_spark.operators import extract_arrow, extract_catalyst
+from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
+from rag_document_parser_spark.operators import extract_arrow
 from rag_document_parser_spark.schema import LINEAGE_SCHEMA
-
-
-def _default_cfg(engine: str) -> ExtractConfig:
-    """Engine-specific default: the catalyst engine rejects configs it
-    cannot implement, so its default must be CATALYST_CONFIG."""
-    return DEFAULT_CONFIG if engine == "arrow" else CATALYST_CONFIG
 
 
 def bucket_col(n_buckets: int):
@@ -62,54 +55,12 @@ def doc_hash_col():
     return F.xxhash64(F.col("doc_id"), F.col("spans_clean"))
 
 
-def chunk_giant_docs(df: DataFrame, max_spans: int) -> DataFrame:
-    """Split rows whose span array exceeds ``max_spans`` into chunk rows.
-
-    Adds ``chunk_id`` (0-based) and ``n_chunks``. Normal docs pass through
-    untouched with chunk_id=0, n_chunks=1. Kept as a public inspection
-    helper (tests assert chunk counts with it); ``extract`` below uses the
-    leaner disjoint-branch path instead.
-    """
-    n_chunks = F.greatest(
-        F.lit(1), F.ceil(F.size("spans") / F.lit(max_spans))
-    ).cast("int")
-    chunked = df.withColumn("n_chunks", n_chunks)
-    small = chunked.where(F.col("n_chunks") == 1).withColumn("chunk_id", F.lit(0))
-    big = (
-        chunked.where(F.col("n_chunks") > 1)
-        .select(
-            "doc_id",
-            "n_chunks",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("n_chunks") - 1),
-                    lambda i: F.slice("spans", i * max_spans + 1, max_spans),
-                )
-            ).alias("chunk_id", "spans"),
-        )
-        .select("doc_id", "spans", "n_chunks", "chunk_id")
-    )
-    return small.select("doc_id", "spans", "n_chunks", "chunk_id").unionByName(big)
-
-
-# U+0001 as chunk-tag delimiter: cannot collide with printable doc_ids, and
-# the strip regex additionally requires the exact "<SOH><digits>/<digits>$"
-# shape before treating a row as chunked.
-_SEP = "\x01"
-
-# public extract() columns (title_key is kernel-internal, used only by
-# the chunk reassembly below)
-_OUT_COLS = ["doc_id", "spans_clean", "route", "title", "success", "error",
-             "wall_us"]
-
-
-def _chunk_rows(df: DataFrame, max_spans: int) -> DataFrame:
-    """ONE pass over the input producing kernel-ready rows for every doc:
-    normal docs emit their single untagged row; giant docs emit one row
-    per span-slice with chunk bookkeeping smuggled into the doc_id
-    ("<id><SOH><chunk>/<n>") so the kernel stays a pure (doc_id, spans)
-    operator. No filters — routing is a when/otherwise inside the explode
-    input, so the physical plan scans the source exactly once.
+def _span_slices(df: DataFrame, max_spans: int) -> DataFrame:
+    """ONE filter-free pass slicing every doc's span array into rows of
+    at most ``max_spans`` spans: ``(doc_id, _nc, chunk_id, spans)``,
+    where ``_nc`` is the doc's chunk count. Normal docs emit their single
+    row unchanged (chunk_id=0, _nc=1). Routing is a when/otherwise inside
+    the explode input, so the physical plan scans the source exactly once.
 
     posexplode_OUTER on purpose: plain posexplode lets
     InferFiltersFromGenerate add size()>0 filters on the generator INPUT
@@ -127,26 +78,48 @@ def _chunk_rows(df: DataFrame, max_spans: int) -> DataFrame:
             lambda i: F.slice("spans", i * max_spans + 1, max_spans),
         )
     )
-    exploded = df.select(
+    return df.select(
         F.col("doc_id"),
         n_chunks.alias("_nc"),
         F.posexplode_outer(slices).alias("chunk_id", "spans"),
     )
+
+
+def chunk_giant_docs(df: DataFrame, max_spans: int) -> DataFrame:
+    """Split rows whose span array exceeds ``max_spans`` into chunk rows.
+
+    Adds ``chunk_id`` (0-based) and ``n_chunks``. Normal docs pass through
+    untouched with chunk_id=0, n_chunks=1. A public inspection helper
+    (tests and the benchmark assert chunk counts with it) over the same
+    slicing ``extract`` runs.
+    """
+    return _span_slices(df, max_spans).select(
+        "doc_id", "spans", F.col("_nc").alias("n_chunks"), "chunk_id")
+
+
+# U+0001 as chunk-tag delimiter: cannot collide with printable doc_ids, and
+# the strip regex additionally requires the exact "<SOH><digits>/<digits>$"
+# shape before treating a row as chunked.
+_SEP = "\x01"
+
+# public extract() columns (title_key is kernel-internal, used only by
+# the chunk reassembly below)
+_OUT_COLS = ["doc_id", "spans_clean", "route", "title", "success", "error",
+             "wall_us"]
+
+
+def _chunk_rows(df: DataFrame, max_spans: int) -> DataFrame:
+    """Kernel-ready ``(doc_id, spans)`` rows, one per span-slice, with the
+    chunk bookkeeping smuggled into the doc_id ("<id><SOH><chunk>/<n>")
+    so the kernel stays a pure (doc_id, spans) operator. Docs that fit
+    one chunk keep their untagged doc_id."""
     tagged = F.when(
         F.col("_nc") == 1, F.col("doc_id")
     ).otherwise(
         F.concat(F.col("doc_id"), F.lit(_SEP),
                  F.concat_ws("/", F.col("chunk_id"), F.col("_nc"))))
-    return exploded.select(tagged.alias("doc_id"), "spans",
-                           (F.col("_nc") > 1).alias("_big"))
-
-
-def _chunk_big(df: DataFrame, max_spans: int) -> DataFrame:
-    """Giant-doc rows -> one row per span-slice (tagged doc_ids). Used by
-    the ``stable=True`` path; the default path routes everything through
-    the filter-free ``_chunk_rows`` instead."""
-    return _chunk_rows(df.where(F.size("spans") > max_spans), max_spans) \
-        .select("doc_id", "spans")
+    return _span_slices(df, max_spans).select(tagged.alias("doc_id"),
+                                              "spans")
 
 
 def _reassemble_big(out: DataFrame) -> DataFrame:
@@ -243,17 +216,11 @@ def _nondet(c):
     return F.when(F.spark_partition_id() >= 0, c).otherwise(F.lit(False))
 
 
-def extract(df: DataFrame, cfg: ExtractConfig | None = None,
-            engine: str = "arrow", chunk: bool = True,
-            stable: bool = False,
+def extract(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
+            chunk: bool = True, stable: bool = False,
             partition_expr=None, num_partitions: int | None = None,
             ) -> DataFrame:
     """The composable single-operator form (SURVEY.md §3.2): no sinks.
-
-    ``cfg=None`` resolves to the engine's own default (DEFAULT_CONFIG
-    for arrow, CATALYST_CONFIG for catalyst — the catalyst engine raises
-    on configs it cannot implement, so defaulting it to DEFAULT_CONFIG
-    would be a guaranteed error).
 
     Chunking (default path, ``stable=False``): the input is scanned
     ONCE into a protective exchange
@@ -278,41 +245,34 @@ def extract(df: DataFrame, cfg: ExtractConfig | None = None,
     determinism — with an unstable plan docs can be lost or duplicated
     between the two scans.
     """
-    if cfg is None:
-        cfg = _default_cfg(engine)
-    kernel = extract_arrow if engine == "arrow" else extract_catalyst
     if not chunk:
-        return kernel(df, cfg).select(*_OUT_COLS)
+        return extract_arrow(df, cfg).select(*_OUT_COLS)
     max_spans = cfg.max_spans_per_chunk
 
     if stable:
         small = df.where(F.size("spans") <= max_spans)
         big = df.where(F.size("spans") > max_spans)
-        out_small = kernel(small, cfg)
-        # spread the rare giant-doc chunks across tasks (posexplode
-        # leaves them co-located with their source row)
-        chunked = _chunk_big(big, max_spans).repartition(F.col("doc_id"))
-        out_big = _reassemble_big(kernel(chunked, cfg))
-        return out_small.select(*_OUT_COLS) \
-            .unionByName(out_big.select(*_OUT_COLS))
-
-    # exchange the RAW rows (partition_expr sees untagged doc_ids, so a
-    # caller's bucket expression partitions exactly), then route ABOVE
-    # the materialized shuffle: the common small-doc path flows straight
-    # into the kernel with zero chunk bookkeeping — no wrap/explode copy
-    # — while the rare big branch explodes post-exchange and pays one
-    # more (tiny) exchange to spread its chunks across tasks.
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    pexpr = partition_expr if partition_expr is not None else F.col("doc_id")
-    ex = df.select("doc_id", "spans").repartition(num_partitions, pexpr)
-    is_big = F.coalesce(F.size("spans") > max_spans, F.lit(False))
-    small = ex.where(_nondet(~is_big))
-    big = ex.where(_nondet(is_big))
-    out_small = kernel(small, cfg)
-    chunked = _chunk_rows(big, max_spans).select("doc_id", "spans") \
-        .repartition(F.col("doc_id"))
-    out_big = _reassemble_big(kernel(chunked, cfg))
+    else:
+        # exchange the RAW rows (partition_expr sees untagged doc_ids, so
+        # a caller's bucket expression partitions exactly), then route
+        # ABOVE the materialized shuffle: the common small-doc path flows
+        # straight into the kernel with zero chunk bookkeeping — no
+        # wrap/explode copy — while the rare big branch explodes
+        # post-exchange.
+        if num_partitions is None:
+            num_partitions = \
+                df.sparkSession.sparkContext.defaultParallelism * 2
+        pexpr = partition_expr if partition_expr is not None \
+            else F.col("doc_id")
+        ex = df.select("doc_id", "spans").repartition(num_partitions, pexpr)
+        is_big = F.coalesce(F.size("spans") > max_spans, F.lit(False))
+        small = ex.where(_nondet(~is_big))
+        big = ex.where(_nondet(is_big))
+    out_small = extract_arrow(small, cfg)
+    # spread the rare giant-doc chunks across tasks (posexplode leaves
+    # them co-located with their source row)
+    chunked = _chunk_rows(big, max_spans).repartition(F.col("doc_id"))
+    out_big = _reassemble_big(extract_arrow(chunked, cfg))
     return out_small.select(*_OUT_COLS) \
         .unionByName(out_big.select(*_OUT_COLS))
 
@@ -334,8 +294,7 @@ def run_job(
     spark: SparkSession,
     input_df: DataFrame,
     out_dir: str,
-    cfg: ExtractConfig | None = None,
-    engine: str = "arrow",
+    cfg: ExtractConfig = DEFAULT_CONFIG,
     resume: bool = True,
     fail_after_buckets: int | None = None,
     run_id: str | None = None,
@@ -358,8 +317,6 @@ def run_job(
     files per bucket directory).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    if cfg is None:
-        cfg = _default_cfg(engine)
     n_buckets = cfg.n_buckets
     df = input_df.withColumn("bucket", bucket_col(n_buckets))
 
@@ -389,11 +346,10 @@ def run_job(
     # pre_bucketed inputs skip it entirely (stable=True: the bucketed
     # input is deterministic, the two-scan chunk path is safe and free).
     if pre_bucketed:
-        out = extract(df.select("doc_id", "spans"), cfg, engine=engine,
-                      stable=True)
+        out = extract(df.select("doc_id", "spans"), cfg, stable=True)
     else:
         par = min(n_buckets, spark.sparkContext.defaultParallelism * 2)
-        out = extract(df.select("doc_id", "spans"), cfg, engine=engine,
+        out = extract(df.select("doc_id", "spans"), cfg,
                       partition_expr=bucket_col(n_buckets),
                       num_partitions=par)
     out = out.withColumn("doc_hash", doc_hash_col()) \

@@ -3,10 +3,9 @@
 This module defines, in pure Python, exactly what ``spans_clean`` must be
 for a given ``(doc_id, spans)`` row. It is the *golden oracle* for the
 pytest invariant (span-sequence equality on (kind, text, media_ref, order),
-per BASELINE.json) and the spec that the Catalyst path
-(``operators/extract_catalyst.py``), the Arrow kernel
+per BASELINE.json) and the spec that the Arrow kernel
 (``operators/extract_arrow.py``) and the DuckDB oracle SQL
-(``__spark_entry__.py``) all implement.
+(``__spark_entry__.py``) both implement.
 
 Every rule cites the reference behavior it reproduces
 (``/root/reference/...``). Regexes are **RE2-safe** (no backreferences, no
@@ -654,8 +653,7 @@ def clean_span(kind: str, text: Optional[str], media_ref: Optional[str],
         return (cleaned != ""), cleaned
     if kind == "json":
         # cfg.flatten_json=True → the reference json_parser path; False →
-        # its raw_json fallback (content unchanged before post-process),
-        # which is also what the pure-Catalyst engine implements.
+        # its raw_json fallback (content unchanged before post-process).
         if text is None:
             return False, None
         flat = json_flatten(text) if cfg.flatten_json else None

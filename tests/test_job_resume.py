@@ -55,7 +55,7 @@ def test_stale_bucket_dirs_not_swept_into_lineage(spark, tmp_path):
 
     # simulate a crash between data write and lineage append: write data
     # for the full corpus directly, no lineage rows at all
-    staged = extract(df, CFG, engine="arrow").withColumn(
+    staged = extract(df, CFG).withColumn(
         "doc_hash", F.xxhash64("doc_id", "spans_clean")).withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(CFG.n_buckets)).cast("int"))
     staged.write.mode("overwrite").partitionBy("bucket").parquet(f"{out}/data")
@@ -105,7 +105,7 @@ def test_chunking_splits_and_reassembles_giant_doc(spark):
     assert n == -(-giant // CFG.max_spans_per_chunk)  # ceil
     assert giant_chunks.agg(F.sum(F.size("spans"))).collect()[0][0] == giant
 
-    out = extract(df, CFG, engine="arrow", chunk=True)
+    out = extract(df, CFG, chunk=True)
     row = out.where(F.col("doc_id") == "doc-giant").collect()[0]
     docs = {d["doc_id"]: d for d in
             generate_fixture_docs(seed=42, n_docs=30, giant_doc_spans=giant)}
@@ -154,20 +154,18 @@ def test_chunked_tie_breaks_and_title_are_exact(spark):
                                "media_ref:string,offset:int>>")
     cfg = ExtractConfig(max_spans_per_chunk=4, normalize_unicode=False,
                         flatten_json=False)
-    for engine in ("arrow", "catalyst"):
-        got = {r["doc_id"]: r for r in
-               extract(df, cfg, engine=engine, chunk=True).collect()}
-        texts = [s["text"] for s in got["ties"]["spans_clean"]]
-        assert texts == [f"tie {j}" for j in range(10)], engine
-        assert got["titles"]["title"] == "alpha first", engine
-        # offset tie at 3: html_a sits at array position 0 → wins
-        assert got["titles-tied"]["title"] == "zeta last", engine
-        unchunked = {r["doc_id"]: r for r in
-                     extract(df, cfg, engine=engine, chunk=False).collect()}
-        for d in got:
-            assert got[d]["title"] == unchunked[d]["title"], (engine, d)
-            assert [tuple(s) for s in got[d]["spans_clean"]] == \
-                [tuple(s) for s in unchunked[d]["spans_clean"]], (engine, d)
+    got = {r["doc_id"]: r for r in extract(df, cfg, chunk=True).collect()}
+    texts = [s["text"] for s in got["ties"]["spans_clean"]]
+    assert texts == [f"tie {j}" for j in range(10)]
+    assert got["titles"]["title"] == "alpha first"
+    # offset tie at 3: html_a sits at array position 0 → wins
+    assert got["titles-tied"]["title"] == "zeta last"
+    unchunked = {r["doc_id"]: r for r in
+                 extract(df, cfg, chunk=False).collect()}
+    for d in got:
+        assert got[d]["title"] == unchunked[d]["title"], d
+        assert [tuple(s) for s in got[d]["spans_clean"]] == \
+            [tuple(s) for s in unchunked[d]["spans_clean"]], d
 
 
 def test_chunked_extract_single_scan_plan(spark):
@@ -180,7 +178,7 @@ def test_chunked_extract_single_scan_plan(spark):
                         flatten_json=False)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = extract(df, cfg, engine="catalyst", chunk=True) \
+        plan = extract(df, cfg, chunk=True) \
             ._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -206,7 +204,7 @@ def test_chunked_extract_nondeterministic_input_exactly_once(spark):
                      .alias("doc_id"), spans.alias("spans"))
     cfg = ExtractConfig(max_spans_per_chunk=4, normalize_unicode=False,
                         flatten_json=False)
-    out = extract(df, cfg, engine="catalyst", chunk=True).collect()
+    out = extract(df, cfg, chunk=True).collect()
     ids = [r["doc_id"] for r in out]
     assert len(ids) == 120
     assert len(set(ids)) == 120

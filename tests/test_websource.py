@@ -102,6 +102,9 @@ def test_frontier_schedule_host_queue_guard(spark):
         ["url_id", "host", "priority", "delay_ms"])
     with pytest.raises(Exception, match="max_host_queue"):
         frontier_schedule(df, max_host_queue=10).collect()
+    # an empty frontier (zero hosts) is under any cap: nothing to schedule
+    empty = df.where(F.col("url_id") < 0)
+    assert frontier_schedule(empty, max_host_queue=10).collect() == []
 
 
 def test_canonical_dedup_groups_and_solo_docs(spark):
