@@ -12,7 +12,7 @@ Two generators:
 2. ``spans_df_from_documents(spark, sf_dir, mult)`` — Catalyst-only
    synthesis of a ``(doc_id, spans)`` corpus from the driver-provided
    ``documents`` parquet table. Used by ``__spark_entry__.entry`` and
-   ``bench.py``: because it is pure DataFrame expressions, it scales to any
+   ``perfbench/``: because it is pure DataFrame expressions, it scales to any
    multiplier without a driver-side loop (the 100 TB story: the corpus
    builder itself is distributed).
 
@@ -308,8 +308,8 @@ def fixture_df(spark: SparkSession, seed: int = 42, n_docs: int = 200,
 # Catalyst-side corpus synthesis from the driver `documents` table
 # ---------------------------------------------------------------------------
 
-def spans_df_from_documents(spark: SparkSession, sf_dir: str, mult: int = 1,
-                            bucket_for: "int | None" = None) -> DataFrame:
+def spans_df_from_documents(spark: SparkSession, sf_dir: str,
+                            mult: int = 1) -> DataFrame:
     """Deterministically wrap driver `documents` rows into the span model.
 
     Pure DataFrame expressions — distributes at any scale. Each source row
@@ -318,13 +318,6 @@ def spans_df_from_documents(spark: SparkSession, sf_dir: str, mult: int = 1,
     10% markdown, 10% json, ~20% pdf (sentence-split into reversed
     pdf_block spans; kernel must restore order), ~20% interleaved
     text+media.
-
-    ``bucket_for=n_buckets`` partitions the CHEAP pre-synthesis rows by
-    the job's deterministic bucket (``pmod(xxhash64(doc_id), n)``) — the
-    local analog of an Iceberg table bucket-partitioned on write. A
-    ``run_job(pre_bucketed=True)`` consumer then skips its own exchange
-    entirely, so the wide synthesized span rows never shuffle: the only
-    exchange in the whole job moves slim text rows.
     """
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if mult > 1:
@@ -333,26 +326,15 @@ def spans_df_from_documents(spark: SparkSession, sf_dir: str, mult: int = 1,
         )
     else:
         df = df.withColumn("replica", F.lit(0))
-    doc_id_expr = F.concat_ws("-", F.lit("d"), F.col("doc_id"), F.col("replica"))
     # Repartition the cheap (text-only) rows BEFORE the span construction:
     # the driver testdata is one parquet file, so without this every
     # downstream projection — including the expensive span synthesis —
     # runs in a single pre-shuffle task and nothing scales with cores.
     # A real Iceberg corpus arrives in many files and would not need it.
-    if bucket_for:
-        # explicit partition count: an expression-only repartition is
-        # subject to AQE partition coalescing, which collapses the small
-        # cheap-row shuffle to a handful of tasks and serializes the
-        # expensive downstream synthesis+kernel
-        n_parts = min(bucket_for,
-                      spark.sparkContext.defaultParallelism * 2)
-        df = df.repartition(n_parts, F.pmod(F.xxhash64(doc_id_expr),
-                                            F.lit(bucket_for)))
-    else:
-        df = df.repartition(spark.sparkContext.defaultParallelism * 2,
-                            F.col("doc_id"), F.col("replica"))
+    df = df.repartition(spark.sparkContext.defaultParallelism * 2,
+                        F.col("doc_id"), F.col("replica"))
 
-    doc_id = doc_id_expr
+    doc_id = F.concat_ws("-", F.lit("d"), F.col("doc_id"), F.col("replica"))
     # md5-derived 60-bit hash (NOT xxhash64): identical value is computable
     # in DuckDB as ('0x'||substring(md5(id),1,15))::BIGINT, so the whole
     # corpus synthesis is replicable by the oracle in __spark_entry__.py.

@@ -210,12 +210,14 @@ def strand_url_pairs(df: DataFrame, url_col: str = "url",
 # "a.cdn.site.co.uk" and "www.site.co.uk" are the same publisher and
 # must pool in source statistics, mixture weights, and blocklists. The
 # registrable domain is one label more than the host's longest matching
-# PUBLIC SUFFIX (Mozilla PSL semantics). Documented subset: a literal
-# suffix table below (multi-label entries included) instead of the full
-# externally-maintained PSL — swap in the full list as a DataFrame at
-# deploy time; wildcard (*.ck) and exception (!) rules are out of
-# subset. Unmatched hosts fall back to their last TWO labels (the PSL
-# "prevailing rule is '*'" default reduced to 1-label suffixes).
+# PUBLIC SUFFIX (Mozilla PSL semantics). Documented subset: the fixed
+# literal suffix table below (multi-label entries included), not the
+# full externally-maintained PSL. The table is compiled into the
+# expression; ``registrable_domain`` takes no suffix-list or DataFrame
+# parameter, so a longer list means editing this table. Wildcard (*.ck)
+# and exception (!) rules are out of subset. Unmatched hosts fall back
+# to their last TWO labels (the PSL "prevailing rule is '*'" default
+# reduced to 1-label suffixes).
 PUBLIC_SUFFIXES = [
     "com", "org", "net", "edu", "gov", "mil", "int", "io", "ai", "dev",
     "app", "info", "biz", "co",

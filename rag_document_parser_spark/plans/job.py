@@ -217,13 +217,12 @@ def _nondet(c):
 
 
 def extract(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
-            chunk: bool = True, stable: bool = False,
+            chunk: bool = True,
             partition_expr=None, num_partitions: int | None = None,
             ) -> DataFrame:
     """The composable single-operator form (SURVEY.md §3.2): no sinks.
 
-    Chunking (default path, ``stable=False``): the input is scanned
-    ONCE into a protective exchange
+    Chunking: the input is scanned ONCE into a protective exchange
     (``repartition(num_partitions, partition_expr)``; the expression
     sees raw doc_ids, so a caller's bucket/salt column partitions
     exactly). The small-doc path flows straight to the kernel with zero
@@ -236,38 +235,24 @@ def extract(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     kernel runs exactly once per row, and a non-deterministic input
     plan is safe without persist — the shuffle files are written once,
     so every row flows to exactly one branch.
-
-    ``stable=True`` (for inputs that are deterministic AND cheap to
-    rescan — a stored/bucketed table, e.g. ``run_job(pre_bucketed=
-    True)`` — or callers that must avoid any added exchange): the
-    classic two complementary scans with no protective exchange; only
-    the rare giant-doc branch pays an exchange. The caller asserts plan
-    determinism — with an unstable plan docs can be lost or duplicated
-    between the two scans.
     """
     if not chunk:
         return extract_arrow(df, cfg).select(*_OUT_COLS)
     max_spans = cfg.max_spans_per_chunk
 
-    if stable:
-        small = df.where(F.size("spans") <= max_spans)
-        big = df.where(F.size("spans") > max_spans)
-    else:
-        # exchange the RAW rows (partition_expr sees untagged doc_ids, so
-        # a caller's bucket expression partitions exactly), then route
-        # ABOVE the materialized shuffle: the common small-doc path flows
-        # straight into the kernel with zero chunk bookkeeping — no
-        # wrap/explode copy — while the rare big branch explodes
-        # post-exchange.
-        if num_partitions is None:
-            num_partitions = \
-                df.sparkSession.sparkContext.defaultParallelism * 2
-        pexpr = partition_expr if partition_expr is not None \
-            else F.col("doc_id")
-        ex = df.select("doc_id", "spans").repartition(num_partitions, pexpr)
-        is_big = F.coalesce(F.size("spans") > max_spans, F.lit(False))
-        small = ex.where(_nondet(~is_big))
-        big = ex.where(_nondet(is_big))
+    # exchange the RAW rows (partition_expr sees untagged doc_ids, so a
+    # caller's bucket expression partitions exactly), then route ABOVE
+    # the materialized shuffle: the common small-doc path flows straight
+    # into the kernel with zero chunk bookkeeping — no wrap/explode copy
+    # — while the rare big branch explodes post-exchange.
+    if num_partitions is None:
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
+    pexpr = partition_expr if partition_expr is not None \
+        else F.col("doc_id")
+    ex = df.select("doc_id", "spans").repartition(num_partitions, pexpr)
+    is_big = F.coalesce(F.size("spans") > max_spans, F.lit(False))
+    small = ex.where(_nondet(~is_big))
+    big = ex.where(_nondet(is_big))
     out_small = extract_arrow(small, cfg)
     # spread the rare giant-doc chunks across tasks (posexplode leaves
     # them co-located with their source row)
@@ -298,23 +283,12 @@ def run_job(
     resume: bool = True,
     fail_after_buckets: int | None = None,
     run_id: str | None = None,
-    pre_bucketed: bool = False,
 ) -> dict:
     """Run the full extraction job. Returns summary counters.
 
     ``fail_after_buckets`` is a test hook: process only the first K buckets
     (by bucket id) then stop, simulating a mid-job failure so the resume
     path can be exercised.
-
-    ``pre_bucketed=True`` declares that the input is already partitioned
-    by ``pmod(xxhash64(doc_id), cfg.n_buckets)`` — an Iceberg table
-    bucket-partitioned on write, or a corpus built with
-    ``spans_df_from_documents(bucket_for=...)``. The job then skips its
-    own exchange, so the wide span rows never shuffle (bucket membership
-    is still recomputed deterministically for the write/lineage, and
-    resume semantics are unchanged). Declaring it for a mis-partitioned
-    input is safe for correctness — only write locality degrades (more
-    files per bucket directory).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     n_buckets = cfg.n_buckets
@@ -343,15 +317,9 @@ def run_job(
     # bucket exchange (partition_expr = the deterministic bucket, so each
     # bucket's rows land in exactly one task → one file per bucket dir;
     # giant-doc chunks spread via extract's internal second exchange).
-    # pre_bucketed inputs skip it entirely (stable=True: the bucketed
-    # input is deterministic, the two-scan chunk path is safe and free).
-    if pre_bucketed:
-        out = extract(df.select("doc_id", "spans"), cfg, stable=True)
-    else:
-        par = min(n_buckets, spark.sparkContext.defaultParallelism * 2)
-        out = extract(df.select("doc_id", "spans"), cfg,
-                      partition_expr=bucket_col(n_buckets),
-                      num_partitions=par)
+    par = min(n_buckets, spark.sparkContext.defaultParallelism * 2)
+    out = extract(df.select("doc_id", "spans"), cfg,
+                  partition_expr=bucket_col(n_buckets), num_partitions=par)
     out = out.withColumn("doc_hash", doc_hash_col()) \
              .withColumn("bucket", bucket_col(n_buckets))
 

@@ -6,10 +6,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+from rag_document_parser_spark.config import DEFAULT_CONFIG
+
 
 def get_spark(app: str = "rag-document-parser-spark", master: str | None = None,
               shuffle_partitions: int = 32, extra: dict[str, str] | None = None) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    master = master or f"local[{cpus}]"
     b = (
         SparkSession.builder.appName(app)
         .master(master)
@@ -17,7 +20,8 @@ def get_spark(app: str = "rag-document-parser-spark", master: str | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(DEFAULT_CONFIG.arrow_max_records_per_batch))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # Pin the heap (-Xms == -Xmx) and pre-touch it: a growable heap in

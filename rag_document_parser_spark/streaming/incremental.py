@@ -564,6 +564,11 @@ def stream_group_mass(
     the full corpus — the test pins that equality. State is
     |groups| rows; the driver-side rewrite per batch is the one case
     where collecting is the design, not a shortcut.
+
+    Caveat: the equality holds only when every micro-batch is merged
+    once. A batch that ``foreachBatch`` replays after a crash between
+    the state overwrite and the checkpoint commit is summed twice
+    (ROADMAP direction 4 tracks the replay-safe fix).
     """
     from pyspark.sql import types as T
 
@@ -805,6 +810,12 @@ def stream_recrawl_state(
     interval arithmetic, so the streamed schedule is bit-equal to
     batch ``recrawl_schedule`` on the union — the test pins it. State
     is |urls| fixed-width rows.
+
+    Caveat: the equality holds only when every micro-batch is merged
+    once. A batch that ``foreachBatch`` replays after a crash between
+    the state overwrite and the checkpoint commit has its ``n_obs`` and
+    ``n_changed`` summed twice (ROADMAP direction 4 tracks the
+    replay-safe fix).
     """
     from pyspark.sql import types as T
 

@@ -1,10 +1,11 @@
 """Scaling evidence for the CURATION CHAIN (auxiliary to the headline).
 
 The north-rule criterion is evidenced on the extraction job
-(scripts/bench_scaling.py); this runner applies the same two-level
-protocol (local[1] vs local[4], fresh JVM per level, one self-contained
-invocation) to the full curation chain — extract → quality gate → PII →
-boilerplate → exact dedup → verified near-dup clusters.
+(``python3 perfbench/run.py --scaling``); this runner applies the same
+two-level protocol (local[1] vs local[4], fresh JVM per level, one
+self-contained invocation) to the full curation chain — extract →
+quality gate → PII → boilerplate → exact dedup → verified near-dup
+clusters.
 
 INPUT CONSTRUCTION MATTERS here in a way it does not for the extract
 job: the naive ``mult`` replication reuses each base doc's text
@@ -25,6 +26,9 @@ Appends a row to BENCH/scaling_matrix.json under "curate_chain" and
 prints the summary.
 
 Usage: python scripts/bench_scaling_curate.py [mult] [--adversarial]
+
+Each level's session comes from ``session.get_spark``;
+``SPARK_DRIVER_MEM`` sizes its heap (default 8g).
 """
 
 from __future__ import annotations
@@ -42,18 +46,13 @@ LEVELS = (1, 4)
 
 CHILD = r"""
 import json, os, shutil, sys, tempfile, time
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+from rag_document_parser_spark.session import get_spark
 cores, mult, adversarial = int(sys.argv[1]), int(sys.argv[2]), sys.argv[3] == "1"
-spark = (SparkSession.builder.master(f"local[{cores}]")
-    .config("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
-    .config("spark.driver.memory", "16g")
-    .config("spark.driver.extraJavaOptions", "-Xms16g -XX:+AlwaysPreTouch")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.local.dir", "/dev/shm/spark-local"
-            if os.path.isdir("/dev/shm") else "/tmp")
-    .config("spark.ui.showConsoleProgress", "false")
-    .config("spark.ui.enabled", "false")
-    .appName("curate-scaling").getOrCreate())
+spark = get_spark(app="curate-scaling", master=f"local[{cores}]",
+                  shuffle_partitions=max(cores * 2, 8),
+                  extra={"spark.local.dir": "/dev/shm/spark-local"
+                         if os.path.isdir("/dev/shm") else "/tmp"})
 spark.sparkContext.setLogLevel("ERROR")
 from rag_document_parser_spark.corpus import spans_df_from_documents
 from rag_document_parser_spark.plans.curate import curate, curation_report

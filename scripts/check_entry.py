@@ -5,6 +5,9 @@ DuckDB at sf0.01, and compares row count, column names, and the
 order-insensitive value multiset. Usage:
 
     python scripts/check_entry.py [query ...]
+
+The session comes from ``session.get_spark``; ``SPARK_DRIVER_MEM``
+sizes its heap (default 8g).
 """
 
 from __future__ import annotations
@@ -41,13 +44,10 @@ def df_to_multiset(pdf):
 
 
 def main():
-    from pyspark.sql import SparkSession
+    from rag_document_parser_spark.session import get_spark
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory", "8g")
-             .config("spark.ui.enabled", "false")
-             .appName("check_entry").getOrCreate())
+    spark = get_spark(app="check_entry", master="local[8]",
+                      shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

@@ -210,39 +210,3 @@ def test_chunked_extract_nondeterministic_input_exactly_once(spark):
     assert len(set(ids)) == 120
     assert all(r["success"] for r in out)
 
-
-def test_pre_bucketed_job_matches_standard(spark, tmp_path):
-    """A bucket-partitioned input (Iceberg bucketBy analog) with
-    pre_bucketed=True must produce the identical committed dataset as the
-    standard salted-exchange path — only the plan differs (no wide-row
-    shuffle)."""
-    from rag_document_parser_spark.corpus import spans_df_from_documents
-
-    sf = "/root/testdata/sf0.001"
-    a_dir, b_dir = str(tmp_path / "a"), str(tmp_path / "b")
-    std = spans_df_from_documents(spark, sf)
-    run_job(spark, std, a_dir, CFG, run_id="std")
-    pre = spans_df_from_documents(spark, sf, bucket_for=CFG.n_buckets)
-    run_job(spark, pre, b_dir, CFG, run_id="pre", pre_bucketed=True)
-
-    da = spark.read.parquet(f"{a_dir}/data")
-    db = spark.read.parquet(f"{b_dir}/data")
-    ha = {(r.doc_id, r.doc_hash, r.bucket) for r in
-          da.select("doc_id", "doc_hash", "bucket").collect()}
-    hb = {(r.doc_id, r.doc_hash, r.bucket) for r in
-          db.select("doc_id", "doc_hash", "bucket").collect()}
-    assert ha == hb and len(ha) == 500
-    # lineage checksums agree bucket-for-bucket
-    la = {r.partition_id: (r.doc_count, r.checksum)
-          for r in read_lineage(spark, a_dir).collect()}
-    lb = {r.partition_id: (r.doc_count, r.checksum)
-          for r in read_lineage(spark, b_dir).collect()}
-    assert la == lb
-    # and the pre-bucketed plan has no exchange after the span synthesis:
-    # every bucket directory is written by a single aligned task
-    import os
-    buckets = [d for d in os.listdir(f"{b_dir}/data")
-               if d.startswith("bucket=")]
-    n_files = [len([f for f in os.listdir(f"{b_dir}/data/{d}")
-                    if f.endswith(".parquet")]) for d in buckets]
-    assert max(n_files) == 1
